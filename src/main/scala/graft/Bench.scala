@@ -535,34 +535,6 @@ object Bench {
     // bill it for their own failures; the headline totals are assembled
     // AFTER the band re-runs below)
     val FailPenaltySec = 3600.0
-    // Scale probe: the atlas pair join's NON-broadcast branch — the plan a
-    // global 1/4° grid runs (the exploded grid side exceeds any broadcast
-    // budget and falls back to a shuffle hash join on bin keys). The cap
-    // forced to 0 makes the fallback run at bench scale, so the branch a
-    // 100 TB deployment lives in carries a measured number, not just a
-    // plan assertion (ArgoPipelineSpec pins shape and results).
-    val fallbackSec: Option[Double] = {
-      // save/restore rather than unset: unset would clobber a pre-existing
-      // session override of the cap
-      val prior = spark.conf.getOption("spark.graft.atlasBroadcastMaxRows")
-      try {
-        spark.conf.set("spark.graft.atlasBroadcastMaxRows", "0")
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries("q71_argo_atlas")(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] atlas_fallback          $dt%8.2f s ($n rows)")
-        if (n > 0) Some(dt) else None
-      } catch { case e: Throwable =>
-        // a crash in the forced-fallback branch must be VISIBLE, not a
-        // silently absent stages key
-        System.err.println(s"[bench] atlas_fallback          FAILED: " +
-          s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(300)}")
-        None
-      } finally prior match {
-        case Some(v) => spark.conf.set("spark.graft.atlasBroadcastMaxRows", v)
-        case None => spark.conf.unset("spark.graft.atlasBroadcastMaxRows")
-      }
-    }
     // Scale rehearsal: the heaviest corpus queries on a ~10× blowup of
     // documents + embeddings — a PERF gate, not a correctness one (the
     // driver's DuckDB gate owns values): each query must COMPLETE and its
@@ -719,8 +691,7 @@ object Bench {
         // the near-dup family documents; 4 bits at 20k vectors measured
         // 170 s of quadratic candidates, 8 bits ~7 s). The gate verifies
         // the default; this stage measures the config a 10× corpus runs.
-        // save/restore, not unset — the same clobber-protection as the
-        // fallback probe above (a session-level override must survive)
+        // save/restore, not unset: a session-level override must survive
         val priorBits = spark.conf.getOption("spark.graft.nearDupBits")
         spark.conf.set("spark.graft.nearDupBits", "8")
         try {
@@ -944,14 +915,14 @@ object Bench {
     // loop measures the conf-unset in-session recompute path). Build cost
     // is published too — it is the once-per-ingest price the per-session
     // savings amortize. Parity and plan shape are spec-pinned
-    // (DocStoreSpec / TermStoreSpec / VecStoreSpec / ArgoPipelineSpec);
+    // (DocStoreSpec / TermStoreSpec / VecStoreSpec);
     // this stage carries the measured seconds.
     val storeTimes: Seq[(String, Double)] =
       if (sys.env.getOrElse("SPARK_GRAFT_STORES", "1") == "0") Nil
       else stagePass("stores") { sample => try {
         val dir = graft.TempDirs.create("graft-stores").toString
         // The COLD in-session numbers the stores are up against: a fresh
-        // session rebuilds the interp store / forward-index checkpoint
+        // session rebuilds its forward-index / code checkpoints
         // before its first query answers — that rebuild is exactly what
         // an at-rest store amortizes away, and the warm main-loop numbers
         // structurally EXCLUDE it (min-of-reps keeps the rep where the
@@ -994,8 +965,8 @@ object Bench {
         // q129 joins in round 12 (events Z-store): cold pays the full
         // per-session layout rewrite (forceCold clears its memo), the
         // store path scans the once-per-ingest landing
-        val cold = Seq("q71_argo_atlas", "q97_sparse_cosine",
-          "q78_ivfpq_ann", "q118_image_neardup", "q125_video_neardup",
+        val cold = Seq("q97_sparse_cosine", "q78_ivfpq_ann",
+          "q118_image_neardup", "q125_video_neardup",
           "q127_video_neardup_hamming", "q34_minhash_lsh",
           "q128_bloom_ingest", "q129_zorder_scan").flatMap { name =>
           val oks = (1 to reps).flatMap { _ =>
@@ -1003,9 +974,9 @@ object Bench {
             val t0 = System.nanoTime()
             val n = try SparkEntry.queries(name)(spark, sfDir).count()
               catch { case e: Throwable =>
-                // a failed baseline must be VISIBLE (the fallback-probe
-                // discipline) and must never print its time-to-failure as
-                // if it were a measurement; the cold key is then omitted,
+                // a failed baseline must be VISIBLE and must never print
+                // its time-to-failure as if it were a measurement; the
+                // cold key is then omitted,
                 // so no consumer silently compares the store path against
                 // a bogus baseline
                 System.err.println(s"[bench] stores ${name.takeWhile(_ != '_')} cold FAILED: " +
@@ -1047,12 +1018,6 @@ object Bench {
           timed1("vec") {
             graft.queries.EmbeddingQueries.landVecStore(spark, sfDir, s"$dir/vecs")
           },
-          timed1("atlas") {
-            graft.argo.AtlasStore.saveBucketed(
-              graft.queries.ArgoQueries.profilesProbe(spark, sfDir),
-              graft.queries.ArgoQueries.ExportAtlas, "bench_atlasstore",
-              buckets = 32, path = Some(s"$dir/atlas"))
-          },
           timed1("media") {
             graft.queries.StreamMultimodalQueries.landMediaStore(
               spark, sfDir, "bench_mediastore", buckets = 32,
@@ -1085,7 +1050,6 @@ object Bench {
           "spark.graft.docStore" -> s"$sfDir=bench_docstore",
           "spark.graft.termStore" -> s"$sfDir=bench_termstore",
           "spark.graft.vecStore" -> s"$sfDir=$dir/vecs",
-          "spark.graft.atlasStore" -> s"$sfDir=bench_atlasstore",
           "spark.graft.mediaStore" -> s"$sfDir=bench_mediastore",
           "spark.graft.bandStore" -> s"$sfDir=bench_bandstore",
           "spark.graft.eventsZStore" -> s"$sfDir=$dir/eventsz")
@@ -1129,7 +1093,7 @@ object Bench {
             None
           }).toSeq
           val timed = Seq("q37_fingerprint", "q45_ann_ivf_kmeans",
-            "q71_argo_atlas", "q78_ivfpq_ann", "q97_sparse_cosine",
+            "q78_ivfpq_ann", "q97_sparse_cosine",
             "q118_image_neardup", "q125_video_neardup",
             "q127_video_neardup_hamming", "q34_minhash_lsh",
             "q128_bloom_ingest", "q129_zorder_scan").map { name =>
@@ -1149,38 +1113,17 @@ object Bench {
             sample() // in-window witness after every store-path member
             name.takeWhile(_ != '_') -> dt
           }
-          // q71's PROFILE-SOURCE split, published so the store-vs-cold
-          // comparison is attributable from the artifact (ProbeAtlasStore
-          // carries the full breakdown): the store path's extra cost over
-          // the in-session memo is exactly the bucketed parquet scan; the
-          // cold path's is the interp recompute. Both are timed against
-          // the SAME forced-materialization shape (sum over the array
-          // column / a bare count of the pipeline output).
+          // store-vs-rebuild splits, each timed against a forced-
+          // materialization shape; independent try blocks: a failure in
+          // one split must neither discard another's already-measured
+          // numbers nor log under the wrong label
           def minRep(body: => Long): Double =
             (1 to reps).map { _ =>
               val t0 = System.nanoTime()
               body
               (System.nanoTime() - t0) / 1e9
             }.min
-          // independent try blocks: a failure in one split must neither
-          // discard the other's already-measured numbers nor log under
-          // the wrong label
-          val splitQ71 = try {
-            val store = graft.argo.AtlasStore.loadBucketed(spark, "bench_atlasstore")
-            val scan = minRep(store.agg(
-              org.apache.spark.sql.functions.sum(
-                org.apache.spark.sql.functions.size(
-                  org.apache.spark.sql.functions.col("CT")))).head().getLong(0))
-            val interp = minRep(
-              graft.queries.ArgoQueries.profilesProbe(spark, sfDir).count())
-            System.err.println(f"[bench] stores q71 split: scan $scan%.2f s, interp recompute $interp%.2f s")
-            Seq("q71scan" -> scan, "q71interp" -> interp)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores q71 split FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            Nil
-          }
-          // the q97 twin: TermStore postings scan vs the per-session
+          // q97: TermStore postings scan vs the per-session
           // forward-index rebuild (tokenize → doc_id shuffle →
           // checkpoint). Cold state is forced before EVERY rebuild rep —
           // a bare memo invalidate would both time a memo hit on rep 2
@@ -1223,7 +1166,7 @@ object Bench {
             Seq("q129scan" -> scanned, "q129rows" -> total.toDouble)
           }.getOrElse(Nil)
           // media pair splits (VERDICT r12 task 4) — decode vs scan, the
-          // q71interp/q71scan discipline: a losing media pair is then
+          // q97 split's discipline: a losing media pair is then
           // attributable from the artifact (per-session decode saved vs
           // hash-table scan paid). bit_xor forces the hash computation
           // without the ANSI overflow a plain sum of 64-bit hashes risks.
@@ -1246,7 +1189,7 @@ object Bench {
               s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
             Nil
           }
-          val split = splitQ71 ++ splitQ97 ++ splitQ129 ++ zApp ++ zCmp ++
+          val split = splitQ97 ++ splitQ129 ++ zApp ++ zCmp ++
             splitMedia
           (("build" -> build) +: cold) ++ timed ++ split ++ buildSplit
         } finally {
@@ -1254,7 +1197,7 @@ object Bench {
             case (k, Some(v)) => spark.conf.set(k, v)
             case (k, None) => spark.conf.unset(k)
           }
-          (Seq("bench_docstore", "bench_atlasstore", "bench_bandstore") ++
+          (Seq("bench_docstore", "bench_bandstore") ++
             graft.sources.TermStore.tablesOf("bench_termstore") ++
             graft.queries.StreamMultimodalQueries
               .mediaStoreTables("bench_mediastore"))
@@ -1331,8 +1274,8 @@ object Bench {
     // carries the rest. Priority: calibration (the burst verdict — r8's
     // top fix), scale10 walls+counts (attribution), interp throughput
     // (the BASELINE comparison), the stores cold-vs-store headline,
-    // atlas throughput, the 10x atlas profile ratios, the forced
-    // fallback, cores/reps, then the raw row counts.
+    // atlas throughput, the 10x atlas profile ratios, cores/reps, then
+    // the raw row counts.
     val interpT = tput("q70_argo_interp")
     val atlasT = tput("q71_argo_atlas")
     val (calibFragFull, calibFragCompact): (String, String) = {
@@ -1434,7 +1377,7 @@ object Bench {
     }
     // stdout keeps THE ROUND'S representative store pair (q129 = the
     // round-12 Z-store member) plus the stage's own in-window verdict
-    // (VERDICT r10 task 1) — the q97/q118/q71/q78/q125/q127 pairs, the
+    // (VERDICT r10 task 1) — the q97/q118/q78/q125/q127 pairs, the
     // build splits and the pruning counts live in BENCH_FULL, which is
     // where stores detail is read from; at 129 queries the base line
     // leaves no room for more than one pair
@@ -1462,8 +1405,6 @@ object Bench {
         .mkString("\"atlas_profiles\":{", ",", "}"))
     }
     val apFrag: Option[String] = apFragOf(full = true)
-    val fallbackFrag: Option[String] =
-      fallbackSec.map(dt => s""""atlas_fallback_sec":${r2(dt)}""")
     val coresFrag: Option[String] =
       Some(s""""cores":${cpus.toInt},"reps":$reps""")
     val countsFrag: Option[String] =
@@ -1484,7 +1425,6 @@ object Bench {
       s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":$qs$failedPart$rerunPart,"stages":${blocks.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     val fullLine = lineOf(Seq(Some(calibFragFull), scale10FragOf(true),
       interpFrag, storesFrag(_ => true, full = true), atlasFrag, apFrag,
-      fallbackFrag,
       coresFrag, countsFrag).flatten)
     // stdout budget: the driver keeps the final 2000 chars and sbt
     // appends a ~75-char "[success]" line — 1880 leaves real margin.
@@ -1508,7 +1448,7 @@ object Bench {
       "interp" -> interpFragCompact,
       "stores" -> storesFrag(StoresHeadline, full = false),
       "atlas" -> atlasFrag, "atlas_profiles" -> apFragOf(full = false),
-      "fallback" -> fallbackFrag, "cores" -> coresFrag,
+      "cores" -> coresFrag,
       "counts" -> countsFrag)
       .collect { case (name, Some(b)) => (name, b) }
       .foreach { case (name, b) =>

@@ -12,22 +12,25 @@ import graft.functions.{FP, Geo, Interp, Seawater, SeawaterEos, Teos10}
   * The reference walks every grid point of every tile and scans the
   * cropped profile array per point (atlas.py:256-308) — O(cells ×
   * profiles) with hand-rolled tiles/halos for memory. Here the
-  * neighborhood search is an equi-join:
+  * neighborhood search is a narrow generator on the profile side:
   *
-  *  - profiles are assigned ONE (lonBin, latBin) spatial bin;
-  *  - grid cells explode to every bin within the kernel cutoff (3×… in
-  *    latitude, widening with 1/cos φ in longitude, wrapping at ±180°);
-  *  - pairs meet in a shuffle hash join on the bin key, then the exact
+  *  - each cropped profile lists the grid cells that CAN lie within the
+  *    kernel cutoff ([[candidateCells]]: latitude rows within
+  *    ±radius, per row the longitude columns inside the exact spherical
+  *    bound, wrapped at ±180° and clipped to the box, land cells skipped);
+  *  - `explode` turns the list into pair rows, then the exact
   *    `haversine_arg < dcritical` filter (F5) and `exp(−arg)` weight (X3)
   *    — weight on the ARG, not the distance (atlas.py:104-108).
   *
-  * Shuffle volume is O(profiles + cells·neighborhood); tiles, halos and
-  * subdomain stitching (atlas.py:327-371,497-514) have no equivalent —
-  * partitioning does that job.
+  * There is no join and no exchange before the aggregation: each profile
+  * fans out to its own cells inside the task that read it. Tiles, halos
+  * and subdomain stitching (atlas.py:327-371,497-514) have no equivalent
+  * — partitioning does that job.
   *
   * Per-cell statistics aggregate whole 64-level arrays in a typed
   * [[Aggregator]] (A1): map-side partial aggregation shuffles one buffer
-  * per (partition × cell), not one row per (profile × level).
+  * per (partition × cell), not one row per (profile × level) — the only
+  * exchange in [[climTS]].
   */
 class Atlas(
     val box: (Double, Double, Double, Double), // lon1, lon2, lat1, lat2
@@ -56,35 +59,25 @@ class Atlas(
     * < sf·reso degrees of arc). */
   val radiusDeg: Double = smoothingFactor * reso
 
-  /** Spatial bins are a FRACTION of the search radius (radius/4): with
-    * bin = radius the whole domain collapses into a handful of join keys
-    * (all the work lands on ≤6 tasks) and the candidate window overshoots
-    * the disc by 4×. Finer bins cost more exploded grid rows — but the
-    * grid side is cells × neighborhood, orders of magnitude smaller than
-    * the profile side, which stays one row per profile. `binW` is also the
-    * bucketing key contract for [[AtlasStore]]: a profile store bucketed
-    * on these bins joins co-located, with no profile-side shuffle at all. */
-  val nSub = 4
-  val binW: Double = radiusDeg / nSub
-
-  /** Longitude bin count; profile AND grid bins live in [0, nBi) (both
-    * sides pmod-wrap, so a position reported at exactly +180° lands in
-    * the −180° bin instead of an unjoinable phantom bin). */
-  val nBi: Int = math.ceil(360.0 / binW).toInt
-
   // ---- grid (X11: mylinspace ≡ sequence arithmetic, atlas.py:83-90) ------
   def grid(s: SparkSession): DataFrame = {
-    val (lon1, _, lat1, _) = box
-    val (nlon, nlat) = (nLon, nLat)
     val maskUdf = udf(landMask)
-    s.range(nlon.toLong * nlat)
-      .select((col("id") % nlon).cast("int").as("gi"),
-        (col("id") / nlon).cast("int").as("gj"))
-      .select(col("gi"), col("gj"),
-        (lit(lon1) + col("gi") * reso).as("glon"),
-        (lit(lat1) + col("gj") * reso).as("glat"))
-      // F8/S10: land-mask prune BEFORE any join work (atlas.py:266-270)
+    withCellColumns(s.range(nLon.toLong * nLat).toDF())
+      // F8/S10: land-mask prune BEFORE any pair work (atlas.py:266-270)
       .filter(!maskUdf(col("glon"), col("glat")))
+  }
+
+  /** Replaces the row-major cell id column `id` (gj·nLon + gi) with
+    * (gi, gj, glon, glat) — the ONE definition of cell coordinates, shared
+    * by [[grid]] and [[pairs]] so both yield bit-identical glon/glat (and
+    * [[candidateCells]] mirrors it in Scala for the land mask). */
+  private def withCellColumns(df: DataFrame): DataFrame = {
+    val (lon1, _, lat1, _) = box
+    df.withColumn("gi", (col("id") % nLon).cast("int"))
+      .withColumn("gj", (col("id") / nLon).cast("int"))
+      .drop("id")
+      .withColumn("glon", lit(lon1) + col("gi") * reso)
+      .withColumn("glat", lit(lat1) + col("gj") * reso)
   }
 
   // ---- F4: crop_data — prune profiles to box + margin (atlas.py:234-253)
@@ -98,7 +91,7 @@ class Atlas(
     // exact form is used, evaluated at the box's worst-case |lat| edge
     // (incl. the lat margin). If that edge reaches the pole or the asin
     // argument saturates, every longitude can be in range → keep all.
-    // The exact haversine distance is re-checked in the join, so the only
+    // The exact haversine distance is re-checked in `pairs`, so the only
     // requirement here is to never under-crop.
     val latEdge = math.max(math.abs(lat1 - m), math.abs(lat2 + m))
     val sinHalf = math.sin(math.toRadians(m) / 2)
@@ -117,78 +110,103 @@ class Atlas(
       .filter(cyc <= halfW || lit(halfW >= 180.0))
   }
 
-  // ---- J1: the binned neighborhood join ----------------------------------
-  /** (cell × profile) pairs with weight `w = exp(−haversine_arg)`.
-    * Cached by callers that aggregate twice (TS then EAPE — the
-    * reference's kdx/coef/N reuse, atlas.py:289-306). */
+  // ---- J1: the neighborhood fan-out --------------------------------------
+  /** (cell × profile) pairs with weight `w = exp(−haversine_arg)`: every
+    * cropped profile explodes to its candidate cells (see
+    * [[candidateCells]]), then the exact cutoff. A narrow map — no
+    * join, no exchange — so a streaming `profiles` frame (q108) pairs
+    * batch by batch with nothing to hold but the aggregation state. */
   def pairs(s: SparkSession, profiles: DataFrame,
             aux: Option[Column] = None): DataFrame = {
     // CT/SR/IDX packed into ONE binary column ONCE per profile, before the
-    // join fans each profile out to many cells: every downstream pair row
-    // then carries (and every aggregator input decodes) a single flat byte
-    // array instead of three boxed Seq columns — at 1M+ pairs the boxed
-    // tuple decode dominated the whole atlas wall-time.
-    //
-    // If the store already carries THIS atlas's bin columns
-    // (AtlasStore.bucketize stamps binW into the column metadata), reuse
-    // the stored attributes instead of recomputing the floor: a recomputed
-    // expression would erase the scan's bucketed output partitioning, and
-    // with it the whole point of the bucketed layout — the shuffle-free
-    // profile side of the pair join.
-    val storedBins = Seq("bi", "bj").forall { c =>
-      profiles.columns.contains(c) && {
-        val m = profiles.schema(c).metadata
-        m.contains(AtlasStore.BinWKey) && m.getDouble(AtlasStore.BinWKey) == binW
-      }
-    }
-    val cropped = crop(profiles)
+    // fan-out to many cells: every downstream pair row then carries (and
+    // every aggregator input decodes) a single flat byte array instead of
+    // three boxed Seq columns — at 1M+ pairs the boxed tuple decode
+    // dominated the whole atlas wall-time.
+    val cells = udf((plon: Double, plat: Double) => candidateCells(plon, plat))
+    val p = crop(profiles)
       .select(Seq(col("LONGITUDE").as("plon"), col("LATITUDE").as("plat"),
         Atlas.pack3(col("CT"), col("SR"), col("IDX")).as("prof")) ++
-        aux.map(_.as("aux")).toSeq ++
-        (if (storedBins) Seq(col("bi"), col("bj")) else Nil): _*)
-    val p =
-      if (storedBins) cropped
-      else cropped
-        .withColumn("bi",
-          pmod(floor((col("plon") + 180.0) / binW).cast("int"), lit(nBi)))
-        .withColumn("bj", floor((col("plat") + 90.0) / binW).cast("int"))
-    // Longitude neighborhood: the exact in-radius bound at latitude φ is
-    // Δλ ≤ 2·asin(sin(radius/2)/cos φ) (see crop) — the linearized
-    // radius/cos φ slightly under-covers at high latitude. Evaluate at the
-    // cell's worst-case |lat| edge; a saturated asin argument (pole) caps
-    // at half the bins = the full ring.
-    val latEdge = least(lit(89.9), greatest(abs(col("glat") - reso), abs(col("glat") + reso)))
-    val dLonMax = degrees(lit(2.0) * asin(
-      least(lit(1.0), lit(math.sin(math.toRadians(radiusDeg) / 2)) / cos(radians(latEdge)))))
-    val kLon = least(lit(nBi / 2), ceil(dLonMax / binW)).cast("int")
-    val g = grid(s)
-      .withColumn("ki", explode(sequence(-kLon, kLon)))
-      .withColumn("kj", explode(sequence(lit(-nSub), lit(nSub))))
-      .select(col("gi"), col("gj"), col("glon"), col("glat"),
-        pmod(floor((col("glon") + 180.0) / binW).cast("int") + col("ki"), lit(nBi)).as("bi"),
-        (floor((col("glat") + 90.0) / binW).cast("int") + col("kj")).as("bj"))
-    // The exploded grid is cells × O(nSub²) rows. When that is small —
-    // every regional atlas, and a global 1/4° grid only at ~10⁸ — broadcast
-    // it: the huge profile side is never shuffled at all, and the only
-    // exchange left in the whole atlas is the partial-agg buffer shuffle
-    // (partitions × cells rows). Past the threshold, fall back to a
-    // SHUFFLE HASH join on the (well-distributed, radius/4) bin keys —
-    // hinted explicitly, because on this branch we KNOW the grid side
-    // exceeds the broadcast budget (Catalyst's size estimate cannot see
-    // that through the explode) and a sort-merge would pay a useless sort
-    // on throwaway bin keys. Cap overridable per session
-    // (spark.graft.atlasBroadcastMaxRows) so tests and memory-constrained
-    // deployments can exercise/force the shuffle path.
-    val gridRows = nLon.toLong * nLat.toLong * (2 * nSub + 1) * (2 * nSub + 1)
-    val maxBroadcastRows = s.conf.getOption("spark.graft.atlasBroadcastMaxRows")
-      .map(_.toLong).getOrElse(2000000L)
-    val gSide = if (gridRows <= maxBroadcastRows) broadcast(g) else g.hint("shuffle_hash")
-    p.join(gSide, Seq("bi", "bj"))
+        aux.map(_.as("aux")).toSeq: _*)
+      // a separate projection: a generator's sibling expressions run per
+      // EXPLODED row, and pack3/aux must run once per profile
+      .withColumn("id", explode(cells(col("plon"), col("plat"))))
+    withCellColumns(p)
       .withColumn("arg", Geo.haversineArg(col("plon"), col("plat"),
         col("glon"), col("glat")))
       .filter(col("arg") < dCritical) // F5
       .withColumn("w", exp(-col("arg"))) // X3: weight on the arg
-      .drop("bi", "bj", "ki", "kj", "arg")
+      .drop("arg")
+  }
+
+  /** Row-major ids (gj·nLon + gi) of every sea cell that can lie within
+    * [[radiusDeg]] of a profile at (plon, plat) — a superset of the cells
+    * passing `haversine_arg < dCritical`, never missing one:
+    *
+    *  - latitude rows within ±radius (arg ≥ sin²(Δφ/2));
+    *  - per row, the longitude columns within the exact bound
+    *    sin²(Δλ/2) < (dCritical − sin²(Δφ/2)) / (cos φp·cos φg) — at
+    *    Δφ = 0 this is `crop`'s Δλ ≤ 2·asin(sin(r/2)/cos φ) — padded by
+    *    1e-12 in arg space so rounding never drops a boundary cell; a
+    *    saturated bound (rows near a pole) takes the whole row;
+    *  - each longitude window tried at every 360° shift that can reach the
+    *    box, so a position at ±180° and a box across the dateline both
+    *    wrap, with no column listed twice;
+    *  - cells the land mask rejects are skipped, tested on the same
+    *    glon/glat doubles [[grid]] computes.
+    *
+    * A latitude past a pole names the point reflected across it (that is
+    * where the haversine places it); the box itself must lie within
+    * ±90°. A NaN or infinite position lists nothing. */
+  private[graft] def candidateCells(plon: Double, plat: Double): Array[Long] = {
+    val out = Array.newBuilder[Long]
+    if (java.lang.Double.isFinite(plon) && java.lang.Double.isFinite(plat)) {
+      val (lonR, lat0) =
+        if (plat > 90) (plon + 180, 180 - plat)
+        else if (plat < -90) (plon + 180, -180 - plat)
+        else (plon, plat)
+      // into [-180, 180), so the 360° shifts below are a handful however
+      // far out the reported longitude is
+      val lon0 = lonR - 360 * math.floor((lonR + 180) / 360)
+      val (lon1, _, lat1, _) = box
+      val eps = 1e-9 // in cell-index units
+      val gjLo = math.max(0.0, math.ceil((lat0 - radiusDeg - lat1) / reso - eps)).toInt
+      val gjHi = math.min(nLat - 1.0, math.floor((lat0 + radiusDeg - lat1) / reso + eps)).toInt
+      val cosP = math.cos(math.toRadians(lat0))
+      val lonLast = lon1 + (nLon - 1) * reso
+      var gj = gjLo
+      while (gj <= gjHi) {
+        val glat = lat1 + gj * reso
+        val sdlat = math.sin(math.toRadians(glat - lat0) / 2)
+        val room = dCritical - sdlat * sdlat + 1e-12
+        if (room > 0) {
+          val cosPG = cosP * math.cos(math.toRadians(glat))
+          val q = if (cosPG > 0) room / cosPG else 1.0
+          val row = gj.toLong * nLon
+          def emit(gi: Int): Unit =
+            if (!landMask(lon1 + gi * reso, glat)) out += row + gi
+          if (q >= 1) { // saturated: every Δλ can qualify
+            var gi = 0
+            while (gi < nLon) { emit(gi); gi += 1 }
+          } else {
+            val dLon = math.toDegrees(2 * math.asin(math.sqrt(q)))
+            var k = math.floor((lon1 - lon0 - dLon) / 360.0).toInt
+            val kHi = math.ceil((lonLast - lon0 + dLon) / 360.0).toInt
+            var next = 0 // first column not yet listed in this row
+            while (k <= kHi) {
+              val c = lon0 + 360.0 * k
+              var gi = math.max(next.toDouble, math.ceil((c - dLon - lon1) / reso - eps)).toInt
+              val hi = math.min(nLon - 1.0, math.floor((c + dLon - lon1) / reso + eps)).toInt
+              while (gi <= hi) { emit(gi); gi += 1 }
+              next = math.max(next, hi + 1)
+              k += 1
+            }
+          }
+        }
+        gj += 1
+      }
+    }
+    out.result()
   }
 
   // ---- A1: per-cell weighted profile mean --------------------------------
@@ -247,8 +265,8 @@ class Atlas(
     }
     // Persist the PROFILES (one 600 B row each), not the pairs: the pair
     // fan-out multiplies rows by the cells-in-radius factor, so caching it
-    // costs fan-out x more memory than re-running the (broadcast-join +
-    // filter) that produces it from cached profiles. If the caller handed
+    // costs fan-out x more memory than re-running the (explode + filter)
+    // that produces it from cached profiles. If the caller handed
     // us an already-persisted frame (e.g. the memoized interpolated
     // store), it owns the lifecycle — persisting again would just warn,
     // and the finally-unpersist would evict the SHARED cache out from
@@ -261,7 +279,7 @@ class Atlas(
     // bisections for T25) then runs exactly once, in pass-2, instead of
     // being re-executed by both aggregation passes. A caller-supplied
     // tsCells frame replaces pass 1 outright (no bare pair set is built
-    // at all — the fan-out join runs once, in pass 2).
+    // at all — the fan-out runs once, in pass 2).
     val pr = pairs(s, prof, aux = Some(auxCol))
     try {
       val eosB = eos
@@ -325,8 +343,8 @@ object Atlas {
 
   // ---- packed-profile layout ----------------------------------------------
   // One flat byte array per profile: CT floats [0, 4·64), SR floats
-  // [4·64, 8·64), IDX bytes [8·64, 9·64). Pair rows in the atlas join carry
-  // this instead of three array columns: the aggregators read it with
+  // [4·64, 8·64), IDX bytes [8·64, 9·64). Pair rows of the atlas fan-out
+  // carry this instead of three array columns: the aggregators read it with
   // ByteBuffer primitives (no per-element boxing), which is what makes the
   // O(cells × neighborhood) aggregation CPU-bound on the actual arithmetic.
   private val CtOff = 0

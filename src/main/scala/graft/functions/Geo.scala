@@ -45,10 +45,7 @@ object Geo {
     * are reproducible bit-for-bit across engines (used by verified queries). */
   def rationalWeight(dist2: Column): Column = lit(1.0) / (lit(1.0) + dist2)
 
-  /** Spatial bin index for the binned neighborhood join: floor((v - lo)/w).
-    * Profiles get ONE bin; the (small) grid side explodes to all bins within
-    * the search radius, turning the reference's O(cells × profiles) tile scan
-    * (atlas.py:268-307) into a broadcast hash equi-join. */
+  /** Uniform bin index floor((v - lo)/w), the key of a binned equi-join. */
   def binIndex(v: Column, lo: Double, width: Double): Column =
     floor((v - lit(lo)) / lit(width)).cast("long")
 

@@ -167,7 +167,7 @@ object Graph {
     * broadcast join labels the distributed vertices. Result is the
     * identical unique fixpoint: min id per component for edge-touched
     * vertices, own id for isolated ones. */
-  private def driverComponents(es: DataFrame, vertices: DataFrame): DataFrame = {
+  private[graft] def driverComponents(es: DataFrame, vertices: DataFrame): DataFrame = {
     // LongMap: open-addressed on primitive keys — no per-entry boxing, a
     // third of HashMap[Long, Long]'s footprint at the 2M-edge cap
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -178,7 +178,8 @@ object Graph {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.collect().foreach { row =>
+    // bound by name, not position: any column order or extra column works
+    es.select(col("src"), col("dst")).collect().foreach { row =>
       val a = row.getLong(0); val b = row.getLong(1)
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)

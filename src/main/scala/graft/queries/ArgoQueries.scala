@@ -235,24 +235,8 @@ object ArgoQueries extends QueryModule {
   }
 
   // ---- q71: the full three-stage pipeline into an atlas ------------------
-  /** Profile source for the atlas family: the at-rest [[AtlasStore]] when
-    *   spark.graft.atlasStore = "<corpusDir>=<tableName>"
-    * names one landed from the same corpus (the q97/TermStore
-    * discipline) — its bin buckets make the pair join's profile side a
-    * co-located scan (Atlas.pairs reuses the stamped bin columns, so the
-    * shuffle-fallback branch exchanges ONLY the exploded grid; at 100 TB
-    * the profile side is the corpus). Otherwise the per-session
-    * interpolated memo. ArgoPipelineSpec pins plan + parity on the
-    * registered query. */
-  private def atlasProfiles(s: SparkSession, d: String): DataFrame =
-    s.conf.get("spark.graft.atlasStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
-        graft.argo.AtlasStore.loadBucketed(s, table)
-      case _ => pipelineCached(s, d)
-    }
-
   private def q71(s: SparkSession, d: String): DataFrame = {
-    val profiles = atlasProfiles(s, d)
+    val profiles = pipelineCached(s, d)
     val atlas = ExportAtlas
     // no orderBy: rows-only check, and a global sort's range-sampling pass
     // would re-execute the whole aggregation subtree just to pick splits

@@ -1393,7 +1393,7 @@ object EmbeddingQueries extends QueryModule {
     val cents = model.zipWithIndex
       .map { case (c, i) => (i, c.toSeq, norms(i)) }.toSeq
       .toDF("cell", "c_vec", "c_nrm")
-    // At-rest fast path (the TermStore/DocStore/AtlasStore discipline):
+    // At-rest fast path (the TermStore/DocStore discipline):
     // the cell-partitioned store already carries the assignment, and the
     // cell join below prunes its SCAN to the probed directories —
     // VecStoreSpec pins parity + pruning on this registered query.

@@ -1302,7 +1302,7 @@ object StreamMultimodalQueries extends QueryModule {
     Seq("img", "aud", "vid", "vidf", "imgx", "audx").map(sfx => s"${prefix}_$sfx")
 
   /** Measurement probes for the bench's stores-stage media pair splits
-    * (the q71interp/q71scan discipline, VERDICT r12 task 4): the
+    * (the recompute-vs-scan split discipline, VERDICT r12 task 4): the
     * per-session DECODE the store amortizes — q118's image pHash and
     * q125's per-frame video hashes over the REGISTERED corpora, the
     * exact subplans the cold paths pay — timed against the store's

@@ -6,7 +6,7 @@ import graft.functions.TextFns
 
 /** The MinHash LSH band table (doc_id, hs, band, key) at rest — the
   * near-dup member of the layout family ([[DocStore]], [[TermStore]],
-  * [[VecStore]], [[MediaStore]], [[graft.argo.AtlasStore]]).
+  * [[VecStore]], [[MediaStore]]).
   *
   * Every near-dup pass (q34 pair generation, q38 cluster resolution,
   * q110's per-ingest near tier, q101's first-seen maintenance) starts by

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{NormalizeExpr, TextFns}
 
 /** Content-fingerprinted document storage — the at-rest layout for the
-  * dedup family at 100 TB, the text twin of [[graft.argo.AtlasStore]].
+  * dedup family at 100 TB.
   *
   * Exact dedup, dedup-group assignment and decontamination all key on a
   * normalized content fingerprint (the hash-groupBy the q30/q37 oracles

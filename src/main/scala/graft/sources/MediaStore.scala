@@ -5,8 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.multimodal.Media
 
 /** Perceptual hashes at rest — the media member of the at-rest layout
-  * family ([[DocStore]], [[TermStore]], [[VecStore]],
-  * [[graft.argo.AtlasStore]]).
+  * family ([[DocStore]], [[TermStore]], [[VecStore]]).
   *
   * Every perceptual query re-DECODES the media column per session; at
   * 100 TB the decode is orders of magnitude more expensive than the

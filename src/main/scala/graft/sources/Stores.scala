@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The one bucketed-landing writer chain shared by the at-rest stores
-  * ([[graft.argo.AtlasStore]], [[DocStore]]) so they cannot drift on
+  * ([[DocStore]], [[TermStore]], …) so they cannot drift on
   * mode, format, sort order or external-path handling. */
 object Stores {
   def landBucketed(df: DataFrame, table: String, buckets: Int,

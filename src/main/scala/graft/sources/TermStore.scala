@@ -7,7 +7,7 @@ import graft.functions.TextFns
 
 /** The materialized forward index (doc_id, term, tf) at rest — the
   * sparse-retrieval member of the layout family ([[DocStore]],
-  * [[VecStore]], [[graft.argo.AtlasStore]]).
+  * [[VecStore]]).
   *
   * The q97/q102 sparse arms rebuild this table per session behind a
   * localCheckpoint; a real deployment lands it ONCE per ingest — it is

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.KMeans
 
 /** IVF-partitioned embedding storage — the at-rest layout for ANN search
-  * at 100 TB, completing the layout trio with [[graft.argo.AtlasStore]]
-  * (spatial bins) and [[DocStore]] (content fingerprint).
+  * at 100 TB, the vector twin of [[DocStore]] (content fingerprint).
   *
   * The q44/q45 inverted-file queries already score only the nProbe
   * nearest cells, but from a plain store the scan still READS the whole

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.argo.{ArgoSchemas, Atlas, AtlasStore, Interpolator, SummaryBuilder}
+import graft.argo.{ArgoSchemas, Atlas, Interpolator, SummaryBuilder}
 
 /** End-to-end pipeline test on FIXTURES.md-shaped synthetic data: smooth
   * analytic T/S fields sampled at irregular depths → summary → interpolated
@@ -271,101 +271,82 @@ class ArgoPipelineSpec extends SparkSuite {
     assert(n > 0, "the +180° profile fell into an unjoinable phantom bin")
   }
 
-  test("atlas past the broadcast cap: binned shuffle-hash join, identical cells") {
-    // At a global 1/4° grid (~10⁸ exploded rows) the broadcast branch of
-    // Atlas.pairs is out of budget and the shuffle-hash fallback is the
-    // branch a 100 TB run actually lives in — so it must be exercised, not
-    // just exist. Dropping the cap to 0 via conf forces it on the same
-    // small fixture; the fixed-point cell aggregation is partition-
-    // invariant, so both join strategies must produce BIT-identical cells.
-    val atlas = new Atlas(box = (0.0, 30.0, -50.0, -30.0), reso = 2.0)
-    def cells() = atlas.climTS(spark, profiles).filter($"CT" =!= 0.0f)
-      .select($"lon", $"lat", $"pres", $"CT", $"SR")
-      .as[(Float, Float, Float, Float, Float)].collect().toSeq.sorted
-    val pBroad = atlas.pairs(spark, profiles).queryExecution.executedPlan.toString
-    assert(pBroad.contains("BroadcastHashJoin"),
-      s"small grid should broadcast by default:\n$pBroad")
-    val viaBroadcast = cells()
-    assert(viaBroadcast.nonEmpty, "degenerate fixture: no cells with data")
-    spark.conf.set("spark.graft.atlasBroadcastMaxRows", "0")
-    try {
-      // the PAIR join (keys bi, bj) must be shuffle-hash; upstream summary
-      // dict joins legitimately keep broadcasting their tiny dims
-      val pShuf = atlas.pairs(spark, profiles).queryExecution.executedPlan.toString
-      assert(pShuf.contains("ShuffledHashJoin [bi"),
-        s"past the cap the bin join must be shuffle-hash:\n$pShuf")
-      assert(!pShuf.contains("BroadcastHashJoin [bi"),
-        s"grid must not broadcast past the cap:\n$pShuf")
-      assert(cells() == viaBroadcast,
-        "shuffle fallback must produce the exact broadcast-path cells")
-    } finally spark.conf.unset("spark.graft.atlasBroadcastMaxRows")
+  /** Profiles at `pos` (LONGITUDE, LATITUDE), all passing crop's QC gate,
+    * with a profile id in PID and distinct level arrays. */
+  private def positioned(pos: Seq[(Float, Float)]): DataFrame =
+    pos.zipWithIndex.map { case ((lon, lat), i) =>
+      (i, lon, lat, 1.toByte, 1.toByte,
+        (0 until 64).map(k => 2.0f + (i % 17) + 0.01f * k),
+        (0 until 64).map(k => 35.0f + 0.001f * ((i + k) % 11)),
+        (0 until 64).map(k => if (k < 40 || i % 2 == 0) 1.toByte else 0.toByte))
+    }.toDF("PID", "LONGITUDE", "LATITUDE", "FLAG", "DATA_MODE", "CT", "SR", "IDX")
+
+  test("pairs equals the brute-force crop × grid cross join, bit for bit") {
+    // The candidate generator may list extra cells (the haversine cutoff
+    // drops them) but must never miss one: against a cross join of the
+    // cropped profiles with EVERY grid cell, filtered on the same cutoff,
+    // the (profile, cell) set and each weight must match exactly.
+    val land = (lon: Double, lat: Double) =>
+      math.floorMod(math.floor(lon / 7.0).toInt * 3 + math.floor(lat / 5.0).toInt, 4) == 0
+    val atlases = Seq(
+      // global, 360/7 not whole, 28° radius: polar rows take whole rings
+      new Atlas(box = (-180.0, 180.0, -90.0, 90.0), reso = 7.0),
+      // a box across the dateline
+      new Atlas(box = (160.0, 200.0, -30.0, 30.0), reso = 2.5),
+      // land-masked, reaching the pole
+      new Atlas(box = (-40.0, 40.0, 60.0, 90.0), reso = 3.0, landMask = land),
+      // fine and not whole: 20/0.3, 10/0.3
+      new Atlas(box = (-10.0, 10.0, -5.0, 5.0), reso = 0.3, smoothingFactor = 3.0))
+    val rng = new scala.util.Random(7)
+    atlases.foreach { atlas =>
+      val (lon1, lon2, lat1, lat2) = atlas.box
+      val m = atlas.radiusDeg
+      val edges = for {
+        lon <- Seq(lon1, lon2, 180.0, -180.0, lon1 - m / 2, lon2 + m / 2)
+        lat <- Seq(lat1, lat2, 85.0, -85.0, 89.5, -90.0, lat1 - m / 2, lat2 + m / 2)
+      } yield (lon.toFloat, lat.toFloat)
+      val random = Seq.fill(150)(((lon1 - m) + rng.nextDouble() * (lon2 - lon1 + 2 * m),
+        (lat1 - m) + rng.nextDouble() * (lat2 - lat1 + 2 * m)))
+        .map { case (lon, lat) =>
+          // back into the [-180, 180] × [-90, 90] a position can report
+          ((((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0).toFloat,
+            math.max(-90.0, math.min(90.0, lat)).toFloat)
+        }
+      val profs = positioned(edges ++ random)
+      def rows(df: DataFrame) = df
+        .select($"aux", $"gi", $"gj", $"glon", $"glat", $"w")
+        .as[(Int, Int, Int, Double, Double, Double)].collect()
+      val got = rows(atlas.pairs(spark, profs, aux = Some($"PID")))
+      val want = rows(atlas.crop(profs)
+        .select($"PID".as("aux"), $"LONGITUDE".as("plon"), $"LATITUDE".as("plat"))
+        .crossJoin(atlas.grid(spark))
+        .withColumn("arg", graft.functions.Geo.haversineArg(
+          $"plon", $"plat", $"glon", $"glat"))
+        .filter($"arg" < atlas.dCritical)
+        .withColumn("w", exp(-$"arg")))
+      assert(want.length > 100, s"degenerate case ${atlas.box}: ${want.length} pairs")
+      assert(got.length == got.distinct.length, s"a cell listed twice for ${atlas.box}")
+      val (missing, extra) = (want.toSet -- got, got.toSet -- want)
+      assert(missing.isEmpty && extra.isEmpty, s"pairs differ for ${atlas.box} " +
+        s"reso ${atlas.reso}: missing ${missing.take(5)}, extra ${extra.take(5)}")
+    }
   }
 
-  test("bucketed profile store joins co-located: no profile-side exchange") {
-    // The 100 TB at-rest layout: profiles bucketed on the atlas bin key.
-    // Past the broadcast cap the pair join must then shuffle ONLY the
-    // exploded-grid side — the profile side's scan partitioning already
-    // satisfies the join distribution.
+  test("pairs is a narrow map: no join, no exchange; climTS has one exchange") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val atlas = new Atlas(box = (0.0, 30.0, -50.0, -30.0), reso = 2.0)
-    val tmp = graft.TempDirs.create("graft-bucketed")
-    AtlasStore.saveBucketed(profiles, atlas, "profiles_bucketed", buckets = 8,
-      path = Some(tmp.resolve("t").toString))
-    try {
-      val bp = AtlasStore.loadBucketed(spark, "profiles_bucketed")
-      spark.conf.set("spark.graft.atlasBroadcastMaxRows", "0")
-      try {
-        val plan = atlas.pairs(spark, bp).queryExecution.executedPlan.toString
-        assert(plan.contains("ShuffledHashJoin [bi"),
-          s"expected the shuffle-hash pair join:\n$plan")
-        val nEx = "Exchange hashpartitioning\\(bi".r.findAllIn(plan).length
-        assert(nEx == 1, s"only the grid side may shuffle on the bin key, found $nEx:\n$plan")
-        assert(plan.contains("Bucketed: true"),
-          s"profile side must read as a bucketed scan:\n$plan")
-        def cells(src: org.apache.spark.sql.DataFrame) =
-          atlas.climTS(spark, src).filter($"CT" =!= 0.0f)
-            .select($"lon", $"lat", $"pres", $"CT", $"SR")
-            .as[(Float, Float, Float, Float, Float)].collect().toSeq.sorted
-        assert(cells(bp) == cells(profiles),
-          "bucketed store must produce the exact direct-path cells")
-      } finally spark.conf.unset("spark.graft.atlasBroadcastMaxRows")
-    } finally spark.sql("DROP TABLE IF EXISTS profiles_bucketed")
-  }
-
-  test("registered q71 rides the atlas store when spark.graft.atlasStore points at it") {
-    // The co-location proof above lives on hand-built profiles; this is
-    // the REGISTERED atlas query over the at-rest store: identical cells,
-    // a bucketed profile scan, and — under the forced shuffle fallback —
-    // exactly ONE bin-key exchange (the exploded grid side; the 100 TB
-    // profile side stays where its buckets put it).
-    val d = "/root/testdata/sf0.001"
-    val prof = graft.queries.ArgoQueries.profilesProbe(spark, d)
-    val atlas = graft.queries.ArgoQueries.ExportAtlas
-    val tmp = graft.TempDirs.create("graft-atlasstore-q")
-    AtlasStore.saveBucketed(prof, atlas, "atlas_q71", buckets = 8,
-      path = Some(tmp.resolve("t").toString))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"lon", $"lat", $"pres", $"CT", $"SR")
-        .as[(Float, Float, Float, Float, Float)].collect().toSeq.sorted
-    try {
-      val want = rows(SparkEntry.queries("q71_argo_atlas")(spark, d))
-      spark.conf.set("spark.graft.atlasStore", s"$d=atlas_q71")
-      try {
-        val df = SparkEntry.queries("q71_argo_atlas")(spark, d)
-        assert(rows(df) == want, "q71 over the store must equal the memo path")
-        assert(df.queryExecution.executedPlan.toString.contains("Bucketed: true"),
-          "q71 must scan the bucketed store")
-        spark.conf.set("spark.graft.atlasBroadcastMaxRows", "0")
-        try {
-          val df2 = SparkEntry.queries("q71_argo_atlas")(spark, d)
-          assert(rows(df2) == want,
-            "store + forced shuffle fallback must still match")
-          val p2 = df2.queryExecution.executedPlan.toString
-          val nEx = "Exchange hashpartitioning\\(bi".r.findAllIn(p2).length
-          assert(nEx == 1,
-            s"only the grid side may shuffle on the bin key, found $nEx:\n$p2")
-        } finally spark.conf.unset("spark.graft.atlasBroadcastMaxRows")
-      } finally spark.conf.unset("spark.graft.atlasStore")
-    } finally spark.sql("DROP TABLE IF EXISTS atlas_q71")
+    val profs = positioned(profiles.select($"LONGITUDE", $"LATITUDE")
+      .as[(Float, Float)].collect().toSeq)
+    def executed(df: DataFrame) = { df.collect(); df.queryExecution.executedPlan }
+    val pp = executed(atlas.pairs(spark, profs))
+    assert(Aqe.collect(pp) { case j: BaseJoinExec => j }.isEmpty, s"pairs joins:\n$pp")
+    assert(Aqe.collect(pp) { case e: Exchange => e }.isEmpty, s"pairs exchanges:\n$pp")
+    val tp = executed(atlas.climTS(spark, profs))
+    val nEx = Aqe.collect(tp) { case e: Exchange => e }.length
+    assert(nEx == 1, s"climTS must exchange only the partial aggregate, found $nEx:\n$tp")
+    assert(tp.toString.contains("partial_"), s"no map-side partial aggregation:\n$tp")
   }
 
   test("atlas climEAPE R14: near-zero for a homogeneous ocean, SIGSTAR plausible") {

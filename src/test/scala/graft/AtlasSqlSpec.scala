@@ -17,7 +17,7 @@ class AtlasSqlSpec extends SparkSuite {
     GraftSession.registerUdafs(spark)
     val atlas = graft.queries.ArgoQueries.ExportAtlas
     val profiles = graft.queries.ArgoQueries.profilesProbe(spark, d)
-    // the packed at-rest shape a SQL user scans (the AtlasStore layout);
+    // the packed at-rest shape a SQL user scans;
     // the SEMANTIC row filters ride in the SQL below — the geometric
     // crop is deliberately absent, because the join's exact
     // haversine_arg < dcritical re-check makes any crop a pure

@@ -25,6 +25,20 @@ class GraphSpec extends SparkSuite {
     assert(dist === expected)
   }
 
+  test("connected components bind edge columns by name, not position") {
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L))
+    val verts = Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("id")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L)
+    val dstSrc = pairs.map(_.swap).toDF("dst", "src")
+    assert(Graph.connectedComponents(dstSrc, verts).as[(Long, Long)].collect().toMap
+      === expected)
+    // the driver path itself, handed a frame whose leading column is
+    // neither endpoint: positional binding would union the weights
+    val weighted = pairs.map { case (a, b) => (a * 100, b, a) }.toDF("w", "dst", "src")
+    assert(Graph.driverComponents(weighted, verts).as[(Long, Long)].collect().toMap
+      === expected)
+  }
+
   test("driver fast path and distributed propagation agree on a mixed graph") {
     // chains + cliques + isolated, with min ids NOT at chain heads, so a
     // wrong union-find root choice or a missed path compression shows up

@@ -77,4 +77,33 @@ class KernelPropertySpec extends AnyFunSuite {
         sx.forall(dupXs.contains)
     })
   }
+
+  test("atlas candidate cells list every in-radius cell exactly once") {
+    // candidateCells may over-list (the haversine cutoff drops extras) but
+    // must never miss a cell the cutoff keeps, on any box, resolution or
+    // position — HaversineArgExpr.hav is the cutoff's arithmetic, op for op
+    val atlas = for {
+      lon1 <- Gen.oneOf(Gen.choose(-200.0, 170.0), Gen.const(-180.0), Gen.const(170.0))
+      width <- Gen.choose(1.0, 360.0)
+      lat1 <- Gen.oneOf(Gen.choose(-90.0, 80.0), Gen.const(-90.0))
+      height <- Gen.choose(1.0, 90.0 - lat1)
+      reso <- Gen.choose(math.sqrt(width * height / 20000), 8.0)
+      sf <- Gen.choose(1.0, 5.0)
+    } yield new graft.argo.Atlas((lon1, lon1 + width, lat1, lat1 + height), reso, sf)
+    val pos = for {
+      lon <- Gen.oneOf(Gen.choose(-180.0, 180.0), Gen.oneOf(-180.0, 180.0, 0.0),
+        Gen.choose(-1000.0, 1000.0))
+      lat <- Gen.oneOf(Gen.choose(-90.0, 90.0), Gen.oneOf(-90.0, 90.0, 85.0, -89.9))
+    } yield (lon, lat)
+    check(Prop.forAll(atlas, pos) { (a, p) =>
+      val (lon1, _, lat1, _) = a.box
+      val got = a.candidateCells(p._1, p._2)
+      val want = for {
+        gj <- 0 until a.nLat; gi <- 0 until a.nLon
+        if graft.functions.HaversineArgExpr.hav(p._1, p._2,
+          lon1 + gi * a.reso, lat1 + gj * a.reso) < a.dCritical
+      } yield gj.toLong * a.nLon + gi
+      got.distinct.length == got.length && want.forall(got.toSet)
+    })
+  }
 }

@@ -65,8 +65,13 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q71: atlas pipeline joins broadcast and aggregates partially") {
+    // the summary's dictionary joins broadcast their tiny dims; the atlas
+    // itself pairs profiles with cells in a narrow fan-out, joining on no
+    // spatial bin key
     val p = plan("q71_argo_atlas")
-    assert(p.contains("BroadcastHashJoin"), s"grid side should broadcast:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"dictionary joins should broadcast:\n$p")
+    assert("Join \\[b[ij]".r.findFirstIn(p).isEmpty,
+      s"the atlas must not join on a spatial bin key:\n$p")
     assert(p.contains("partial_"), s"profile-mean must pre-aggregate map-side:\n$p")
   }
 
